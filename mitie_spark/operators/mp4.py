@@ -221,14 +221,17 @@ def _resolve_samples(buf: bytes, stbl: dict, budget: list, timescale: int):
     # per-chunk samples_per_chunk via run expansion
     run_len = np.diff(np.concatenate([first, [nch + 1]]))
     spc = np.repeat(runs[:, 1], run_len)
-    total = int(spc.sum())
-    if total < n:
+    chunk_end = np.cumsum(spc)
+    if int(chunk_end[-1]) < n:
         raise UnsupportedMediaError("MP4 stsc covers fewer samples than stsz")
-    sample_chunk = np.repeat(np.arange(nch, dtype=np.int64), spc)[:n]
+    # sample i sits in the first chunk whose cumulative count exceeds i;
+    # a search over the n samples, not an np.repeat over sum(spc), which
+    # untrusted stsc counts can push to billions of entries
+    sample_chunk = np.searchsorted(chunk_end, np.arange(n), side="right")
 
     # per-sample offsets ---------------------------------------------------
     csum = np.concatenate([[0], np.cumsum(sizes)])
-    chunk_first = np.concatenate([[0], np.cumsum(spc)])[:-1]
+    chunk_first = np.concatenate([[0], chunk_end])[:-1]
     chunk_first = np.minimum(chunk_first, n)  # tail chunks past the samples
     within = csum[:-1] - csum[chunk_first[sample_chunk]]
     offsets = chunk_off[sample_chunk] + within

@@ -168,7 +168,8 @@ def hll_distinct(
     standard linear-counting small-range branch (raw <= 2.5m and empty
     registers exist); the 32-bit large-range branch is omitted (at n
     approaching 2^32 use a 64-bit hash — the gate corpora are nowhere
-    near).
+    near). NULL values are not set members and are ignored, so a group
+    holding only NULLs yields no row.
 
     Everything is integer arithmetic over md5-derived bits (the repo's
     md5->int mirror convention), so the estimate is bit-identical under
@@ -190,8 +191,11 @@ def hll_distinct(
     rho = F.when(w == 0, F.lit(HLL_RHO_MAX)).otherwise(
         F.lit(HLL_RHO_MAX) - F.length(F.bin(w))
     )
+    # md5(NULL) is NULL: a NULL value would form its own NULL bucket,
+    # which count("*") takes for an occupied register — drop them first
     reg = (
-        df.select(
+        df.where(F.col(value_col).isNotNull())
+        .select(
             *group_cols,
             F.shiftright(h32, HLL_W_BITS).alias("bucket"),
             rho.alias("rho"),

@@ -515,6 +515,12 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure, see doc_unigram_logprob) — every sum downstream is integer,
     so the score is bit-stable under any partitioning. Score units: 1e-9.
 
+    Overflow bound: the numerator 44·tf·A·1000 must stay under 2**63,
+    i.e. tf·A < 2**63/44000 (~2.1e14); since tf <= A that holds for any
+    tf while A < ~1.4e7 tokens. The denominator's 18·N·dl needs
+    N·dl < 2**63/18 (~5.1e17). Past either, widen the arithmetic to
+    decimal(38) in both this plan and its DuckDB mirror.
+
     Plan shape: the tf/df/dl aggregates are three partial-agg shuffles
     over the (doc_id, token) projection (shared persisted frame with
     doc_unigram_logprob, see doc_tokens); idf is a 4-row broadcast; the

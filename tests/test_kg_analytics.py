@@ -96,16 +96,24 @@ def _hll_ref(values):
     return v_zero, raw, est
 
 
-@pytest.mark.parametrize("n", [40, 5000])
-def test_hll_matches_scalar_reference(spark, n):
+@pytest.mark.parametrize(
+    "n, n_null",
+    [
+        pytest.param(40, 0, id="40"),
+        pytest.param(5000, 0, id="5000"),
+        pytest.param(40, 4, id="40-nulls"),
+    ],
+)
+def test_hll_matches_scalar_reference(spark, n, n_null):
     """n=40 exercises the linear-counting branch, n=5000 the raw branch;
     the distributed register computation must equal the scalar one
-    bit-for-bit."""
+    bit-for-bit. NULL values are not members of the set: the sketch must
+    ignore them, not hash them into a register."""
     from mitie_spark.operators.sketch import hll_distinct
 
     vals = [f"tok{i}" for i in range(n)]
     df = spark.createDataFrame(
-        pd.DataFrame({"g": ["x"] * n, "v": vals})
+        pd.DataFrame({"g": ["x"] * (n + n_null), "v": vals + [None] * n_null})
     )
     row = hll_distinct(df, ["g"], "v").collect()[0]
     v_zero, raw, est = _hll_ref(vals)

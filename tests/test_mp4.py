@@ -132,6 +132,24 @@ def test_hostile_inputs_degrade_to_unsupported():
         extract_frame_bytes(blob[: int(t.offsets[-1])], rngs)
 
 
+def test_hostile_stsc_count_is_not_expanded():
+    """A samples_per_chunk of 2**32-1 in stsc must not size an allocation:
+    the sample→chunk map is searched over the stsz samples, not expanded
+    over the declared per-chunk counts (a ~32 GiB array for this blob)."""
+    frames = _frames(5, seed=11)
+    blob = encode_mp4(frames, samples_per_chunk=3)
+    ref = parse_mp4(blob).video_track()
+    corrupt = bytearray(blob)
+    stsc_at = blob.find(b"stsc")
+    # type, version/flags, entry_count, then entry 0's first_chunk and
+    # samples_per_chunk
+    corrupt[stsc_at + 16 : stsc_at + 20] = (2**32 - 1).to_bytes(4, "big")
+    t = parse_mp4(bytes(corrupt)).video_track()
+    # chunk 0 now claims every sample; the frames are contiguous in mdat,
+    # so each sample still resolves to its true byte range
+    assert np.array_equal(t.offsets, ref.offsets)
+    assert np.array_equal(t.sizes, ref.sizes)
+
 def test_sample_video_frames_stage(spark):
     """The Spark stage: real MP4 payloads in the synthetic media table →
     one row per sampled keyframe with the true coded bytes; non-video and
