@@ -22,13 +22,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+#: Edge count up to which a graph operator solves on the driver instead of
+#: running its distributed loop. At 200k edges x 3 columns the driver copy
+#: is a few tens of MB, while every distributed round pays Spark's per-job
+#: floor, which dominates wall time on graphs this small.
+DRIVER_EDGE_LIMIT = 200_000
+
+
+def driver_edges(edges: DataFrame):
+    """One ``limit(DRIVER_EDGE_LIMIT + 1)`` probe of a persisted edge frame
+    -> the whole edge list as a ``pyarrow.Table`` when it has at most
+    ``DRIVER_EDGE_LIMIT`` rows, else None.
+
+    A probe that comes back at or under the limit IS the edge list, so the
+    driver path costs one job in total. The caller persists ``edges``
+    first: above the limit its distributed loop reuses what the probe
+    computed instead of re-running the upstream plan."""
+    probe = edges.limit(DRIVER_EDGE_LIMIT + 1).toArrow()
+    return probe if probe.num_rows <= DRIVER_EDGE_LIMIT else None
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) undirected → (id, component) with component = min
     vertex id in the component. Vertex ids must be orderable (long/string).
@@ -37,10 +55,8 @@ def connected_components(
     small enough to broadcast is solved with driver-side union-find — the
     distributed loop costs O(log diameter) scheduled rounds, which dominates
     wall time for dedup-group-sized graphs — while anything above
-    ``driver_threshold`` edges runs the shuffle-join min-label loop. The
-    size probe is a single ``limit(threshold+1).collect()`` job: if it comes
-    back under the limit it IS the edge list, so the small path costs one
-    job total."""
+    ``DRIVER_EDGE_LIMIT`` edges runs the shuffle-join min-label loop. The
+    size probe is ``driver_edges``' single job."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
@@ -50,9 +66,9 @@ def connected_components(
         # blocking pipeline) for the checkpoint after already shuffling it
         # for the probe
     )
-    probe = e.limit(driver_threshold + 1).collect()
+    probe = driver_edges(e)
 
-    if len(probe) <= driver_threshold:
+    if probe is not None:
         parent: dict = {}
 
         def find(x):
@@ -61,8 +77,9 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for row in probe:
-            a, b = row["a"], row["b"]
+        for a, b in zip(
+            probe.column("a").to_pylist(), probe.column("b").to_pylist()
+        ):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -175,13 +192,13 @@ def chinese_whispers(
         # would re-run the full upstream (e.g. blocking+verify) for the
         # checkpoint — same reason connected_components persists
     )
-    probe = e.limit(200_001).collect()
-    if len(probe) <= 200_000:
+    probe = driver_edges(e)
+    if probe is not None:
         import pandas as pd
 
         nbrs: dict = {}
-        for row in probe:
-            a, b, wt = row["a"], row["b"], float(row["w"])
+        for a, b, wt in zip(*(probe.column(c).to_pylist() for c in "abw")):
+            wt = float(wt)
             nbrs.setdefault(a, []).append((b, wt))
             nbrs.setdefault(b, []).append((a, wt))
         labels = {v: v for v in nbrs}

@@ -349,13 +349,35 @@ def pagerank(
 ) -> DataFrame:
     """Float PageRank (production variant) -> (node, rank: double).
 
-    Same plan shape as pagerank_integer; ranks sum to <= 1.0 (dangling
-    mass leaks, see above). Use this at real web scale where edge
-    weights would overflow the integer gate variant.
+    Ranks sum to <= 1.0 (dangling mass leaks, see pagerank_integer). Use
+    this at real web scale where edge weights would overflow the integer
+    gate variant.
+
+    Size-gated like ``graph.connected_components``: an edge list of at
+    most ``graph.DRIVER_EDGE_LIMIT`` rows runs the same fixed-iteration
+    update in NumPy on the driver (``_pagerank_local``), because on a
+    graph that small Spark's per-job floor is many times the arithmetic.
+    Above the limit the distributed loop runs, with the same plan shape
+    as pagerank_integer. The driver path sums in a sorted edge order, so
+    its doubles are bit-identical under any input order or partitioning;
+    the distributed loop sums in shuffle order, so its low bits are not.
     """
+    from mitie_spark.operators.graph import driver_edges
+
     # eager persist -> checkpoint -> unpersist, same shape and reasons as
-    # pagerank_integer above
+    # pagerank_integer above; the probe reads the persisted edges
     edges = edges.persist()
+    node_type = _nodes(edges).schema["node"].dataType
+    small = driver_edges(
+        edges.select(
+            F.col("src").cast(node_type), F.col("dst").cast(node_type), "weight"
+        )
+    )
+    if small is not None:
+        edges.unpersist()
+        return _pagerank_local(
+            edges.sparkSession, small, node_type, iters, damping
+        )
     edges.count()
     nodes_p = _nodes(edges).persist()
     n_nodes = nodes_p.agg(F.count("*").alias("n_nodes"))
@@ -388,6 +410,70 @@ def pagerank(
     for h in (e, nodes_p, edges):
         h.unpersist()
     return out
+
+
+def _pagerank_local(spark, edges, node_type, iters: int, damping: float):
+    """``pagerank``'s distributed loop over a driver-sized ``pyarrow``
+    edge table (src, dst, weight), with the loop's semantics case by case:
+
+    - the nodes are the distinct src/dst values, one NULL included; the
+      NULL node gets only the teleport floor;
+    - an edge moves mass only when src, dst and weight are all non-NULL,
+      but a NULL-dst edge's weight still counts in its source's out-weight
+      (the loop joins on src, then drops the NULL dst group in the node
+      join); dangling mass leaks;
+    - each contribution is ``damping * r * weight / out_w``, evaluated in
+      that order, so only the summation order differs from the loop;
+    - a source whose non-NULL out-weights sum to zero raises, where the
+      loop's ANSI division raises DIVIDE_BY_ZERO.
+
+    Edges are sorted and nodes indexed in sorted order before iterating,
+    so the sums run in one order whatever the input order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    edges = edges.sort_by([("src", "ascending"), ("dst", "ascending"),
+                           ("weight", "ascending")])
+    keys = pc.unique(
+        pa.chunked_array(edges["src"].chunks + edges["dst"].chunks,
+                         edges.schema.field("src").type)
+    )
+    has_null = keys.null_count > 0
+    keys = keys.drop_null().sort()
+    k = len(keys)
+    n = k + has_null
+
+    def index(col):  # node index per edge, -1 for a NULL endpoint
+        return pc.index_in(edges[col], value_set=keys).fill_null(-1).to_numpy()
+
+    src, dst = index("src"), index("dst")
+    w = pc.cast(edges["weight"], pa.float64())
+    weighted = (src >= 0) & w.is_valid().to_numpy()
+    w = w.fill_null(0.0).to_numpy()
+    out_w = np.bincount(src[weighted], weights=w[weighted], minlength=k)
+    if iters > 0 and (out_w[src[weighted]] == 0).any():
+        raise ZeroDivisionError(
+            "pagerank: a source's out-weight sums to zero"
+        )
+    flows = weighted & (dst >= 0)
+    f_src, f_dst, f_w = src[flows], dst[flows], w[flows]
+    f_out = out_w[f_src]
+
+    # max(n, 1) only keeps an empty graph from dividing by zero
+    r = np.full(n, 1.0 / max(n, 1))
+    teleport = (1.0 - damping) / max(n, 1)
+    for _ in range(iters):
+        c = damping * r[f_src] * f_w / f_out
+        r = teleport + np.bincount(f_dst, weights=c, minlength=n)
+    out = pa.table({
+        "node": pa.concat_arrays([keys, pa.nulls(int(has_null), keys.type)]),
+        "rank": r,
+    })
+    schema = StructType([StructField("node", node_type),
+                         StructField("rank", DoubleType())])
+    return spark.createDataFrame(out, schema)
 
 
 def hits_integer(

@@ -236,9 +236,11 @@ def run_pipeline(
     # The KG consumer's first ranking signal ("which entities matter"):
     # float production variant (entity graphs at crawl scale overflow the
     # integer gate variant's bound), 5 iterations, evidence-weighted
-    # edges. Same iterative shape as the gated host PageRank — one
-    # dst-keyed shuffle per iteration, invariants persisted, lineage cut
-    # before write (pagerank localCheckpoints its result).
+    # edges. Up to graph.DRIVER_EDGE_LIMIT canonical edges pagerank
+    # iterates on the driver over sorted edges, so a --force run or a
+    # resume rewrites the same doubles (byte-stable); above the limit it
+    # runs the distributed loop, whose shuffle-order double sums make the
+    # stage order-dependent again.
     def build_entity_rank():
         from mitie_spark.operators.webgraph import pagerank
 

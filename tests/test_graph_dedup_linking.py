@@ -22,7 +22,8 @@ def _union_find_components(edges, vertices):
     return {v: find(v) for v in vertices}
 
 
-def test_connected_components_random_graph(spark):
+def test_connected_components_random_graph(spark, monkeypatch):
+    from mitie_spark.operators import graph
     from mitie_spark.operators.graph import connected_components
 
     rng = random.Random(5)
@@ -36,11 +37,9 @@ def test_connected_components_random_graph(spark):
     # same partition structure and same (min-id) representative
     assert got == truth
     # distributed min-label-propagation path must agree with the driver
-    # union-find path (driver_threshold=0 forces the shuffle-join loop)
-    got_dist = {
-        r.id: r.comp
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    # union-find path (a zero driver limit forces the shuffle-join loop)
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 0)
+    got_dist = {r.id: r.comp for r in connected_components(df).collect()}
     assert got_dist == truth
 
 

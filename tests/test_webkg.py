@@ -3,6 +3,8 @@ queries_webkg.py): JSON-LD / OpenGraph / href extraction edge cases,
 hand-computed integer PageRank, the float PageRank invariants, and the
 physical-plan shapes the 100 TB story depends on."""
 
+import random
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -170,19 +172,96 @@ def test_pagerank_integer_dangling_node_gets_teleport_only(spark):
     assert got["a"] == 15 * 10**12 // 200
 
 
-def test_pagerank_float_conserves_mass_on_closed_graph(spark):
+# pagerank's two paths: the default limit keeps these small graphs on the
+# driver, and a negative one sends even an empty edge list to the
+# distributed loop
+_PR_PATHS = {"driver": 200_000, "distributed": -1}
+
+
+def _pr_ranks(monkeypatch, path, df, **kw):
+    from mitie_spark.operators import graph
     from mitie_spark.operators.webgraph import pagerank
 
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", _PR_PATHS[path])
+    return {r.node: r.rank for r in pagerank(df, **kw).collect()}
+
+
+def test_pagerank_float_conserves_mass_on_closed_graph(spark, monkeypatch):
     # every node has outlinks -> no dangling leak -> ranks sum to 1
     edges = [("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("b", "a", 1)]
     df = spark.createDataFrame(
         pd.DataFrame(edges, columns=["src", "dst", "weight"])
     )
-    ranks = {r.node: r.rank for r in pagerank(df, iters=20).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-    assert all(v > 0 for v in ranks.values())
-    # a receives from both b (1/4 of b) and c (all of c): top rank
-    assert max(ranks, key=ranks.get) == "a"
+    for path in _PR_PATHS:
+        ranks = _pr_ranks(monkeypatch, path, df, iters=20)
+        assert abs(sum(ranks.values()) - 1.0) < 1e-9, path
+        assert all(v > 0 for v in ranks.values()), path
+        # a receives from both b (1/4 of b) and c (all of c): top rank
+        assert max(ranks, key=ranks.get) == "a", path
+
+
+def _pr_random_edges(seed):
+    """Weighted multigraph with dangling nodes (the last 3 ids never
+    source an edge), self-loops and duplicate edges."""
+    rng = random.Random(seed)
+    n = rng.randrange(8, 40)
+    rows = [
+        (rng.randrange(n - 3), rng.randrange(n), rng.uniform(0.1, 5.0))
+        for _ in range(rng.randrange(n, 4 * n))
+    ]
+    rows += [(v, v, float(rng.randrange(1, 4))) for v in rng.sample(range(n - 3), 3)]
+    rows += rng.sample(rows, 5)
+    return rows
+
+
+_PR_CASES = {
+    **{f"random-{s}": (_pr_random_edges(s), "bigint") for s in range(4)},
+    # NULL src: its edge moves no mass; the NULL node gets the teleport floor
+    "null-src": ([("a", "b", 1.0), (None, "a", 2.0), ("b", "c", 1.0)], "string"),
+    # NULL dst: its weight still dilutes a's out-weight
+    "null-dst": ([(1, 2, 1.0), (1, None, 3.0), (2, 1, 1.0)], "bigint"),
+    "null-weight": ([("a", "b", None), ("a", "c", 1.0), ("b", "d", None)], "string"),
+    "empty": ([], "string"),
+}
+
+
+@pytest.mark.parametrize("case", list(_PR_CASES))
+def test_pagerank_driver_path_matches_distributed_loop(spark, monkeypatch, case):
+    rows, node_type = _PR_CASES[case]
+    df = spark.createDataFrame(
+        rows, f"src {node_type}, dst {node_type}, weight double"
+    )
+    local = _pr_ranks(monkeypatch, "driver", df, iters=6)
+    dist = _pr_ranks(monkeypatch, "distributed", df, iters=6)
+    assert set(local) == set(dist)
+    for node, rank in dist.items():
+        assert abs(local[node] - rank) <= 1e-12, node
+
+
+def test_pagerank_zero_out_weight_raises_on_both_paths(spark, monkeypatch):
+    from pyspark.errors import ArithmeticException
+
+    # a's out-weights cancel: the loop's ANSI division by zero raises
+    df = spark.createDataFrame(
+        [("a", "b", 1.0), ("a", "c", -1.0), ("b", "a", 1.0)],
+        "src string, dst string, weight double",
+    )
+    with pytest.raises(ZeroDivisionError):
+        _pr_ranks(monkeypatch, "driver", df, iters=2)
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        _pr_ranks(monkeypatch, "distributed", df, iters=2)
+
+
+def test_pagerank_driver_path_is_order_independent(spark, monkeypatch):
+    rows = _pr_random_edges(7)
+    schema = "src bigint, dst bigint, weight double"
+    a = _pr_ranks(monkeypatch, "driver", spark.createDataFrame(rows, schema))
+    b = _pr_ranks(
+        monkeypatch,
+        "driver",
+        spark.createDataFrame(rows[::-1], schema).repartition(3),
+    )
+    assert a == b  # bit-identical doubles, not just close
 
 
 # ---------------------------------------------------------------------------
